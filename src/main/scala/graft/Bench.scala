@@ -56,6 +56,29 @@ object Bench {
     // timing would double-count ~6s of re-runs into the total
     "sim_serving_latency_report")
 
+  /** Runs each build once, in order, then `after`. Returns the
+    * timings of the builds that completed and the names of those that
+    * threw: a time-to-failure is not a build time, so a failed build
+    * stays out of the timings (and so out of the total) and is named
+    * as a failure instead. */
+  private[graft] def timeBuilds(builds: Seq[(String, () => Unit)],
+                                after: () => Unit): (Seq[(String, Double)], Seq[String]) = {
+    val runs = builds.map { case (name, build) =>
+      val t0 = System.nanoTime()
+      val ok =
+        try { build(); true }
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          false
+        }
+      val dt = (System.nanoTime() - t0) / 1e9
+      after()
+      (name, dt, ok)
+    }
+    (runs.collect { case (name, dt, true) => name -> dt },
+      runs.collect { case (name, _, false) => name })
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -95,7 +118,7 @@ object Bench {
           CacheDirs.deleteRecursively(f)
       })
     }
-    val indexBuilds: Seq[(String, Double)] = Seq[(String, () => Unit)](
+    val builds = Seq[(String, () => Unit)](
       "sidx_sig16" -> (() => SimilarityQueries.sigTableCached(spark, sfDir)
         .write.format("noop").mode("overwrite").save()),
       "sidx_bits" -> (() => SimilarityQueries.bitsTableCached(spark, sfDir)
@@ -105,20 +128,12 @@ object Bench {
       "sidx_sq8" -> (() => SimilarityQueries.sq8TableCached(spark, sfDir)
         .write.format("noop").mode("overwrite").save()),
       "sidx_pqcb" -> (() => { SimilarityQueries.pqCodebooksCached(spark, sfDir); () })
-    ).map { case (name, build) =>
-      val t0 = System.nanoTime()
-      try build()
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-      }
-      val dt = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
-      name -> dt
-    }
+    )
+    val (indexBuilds, failedBuilds) = timeBuilds(builds, () => spark.catalog.clearCache())
     // Sorted order: stable run-to-run and round-to-round comparisons
     // (Map iteration order would shuffle which query pays warm-cache
     // effects as the registry grows).
-    var failed = List.empty[String]
+    var failed = failedBuilds.toList
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filterNot { case (name, _) => exactnessTwins(name) }
       .map { case (name, fn) =>

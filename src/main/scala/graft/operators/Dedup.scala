@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /**
  * Deduplication operators for the training-data tier (SURVEY.md §2.8):
@@ -257,7 +258,11 @@ object Dedup {
    * edges preserve every old component and min-labels re-propagate
    * across any merges the new pairs introduce (two old clusters
    * bridged by one new pair collapse to the smaller cluster id).
-   * `labels`: (node, cluster_id); `newPairs`: (aCol, bCol).
+   * `labels`: (node, cluster_id); `newPairs`: (aCol, bCol). Runs
+   * [[clusters]], so its size rule applies: a star + new edge set at
+   * or below `spark.sql.autoBroadcastJoinThreshold` is labelled on the
+   * driver and holds no checkpoint; `maxIters` bounds only the
+   * distributed loop.
    */
   def clustersIncremental(labels: DataFrame, newPairs: DataFrame,
                           aCol: String = "doc_a", bCol: String = "doc_b",
@@ -356,12 +361,29 @@ object Dedup {
    * every id in its component is >= m). The fixpoint of the
    * neighbor-min step equalizes labels across every edge, so the
    * converged label is constant per component and equal to m.
+   *
+   * Size rule: when the measured bytes of the distinct symmetric edge
+   * set (`LoopOpt.statSize` of its checkpoint) are at or below
+   * `spark.sql.autoBroadcastJoinThreshold` (the size the session
+   * already ships through the driver; -1 disables this path), the
+   * edges are collected and labelled by min-root union-find on the
+   * driver instead — same rows, same schema, a local relation that
+   * holds no checkpoint. Such a graph is far below the 32 MB a loop
+   * partition targets, so the loop would run every round as one
+   * serial task plus fixed per-job latency. `maxIters` bounds only
+   * the distributed loop; its result IS a checkpoint, which the
+   * caller frees (`Checkpoints.free`) once nothing reads it.
    */
   def clusters(pairs: DataFrame, aCol: String = "doc_a", bCol: String = "doc_b",
                maxIters: Int = 25): DataFrame = {
     val sym = pairs.select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
     val edges0 = sym.union(sym.select(col("dst"), col("src")))
       .distinct().localCheckpoint()
+    val spark = pairs.sparkSession
+    // read before any withLoopConf: the loop conf turns it off (-1)
+    val driverMax = spark.sessionState.conf.autoBroadcastJoinThreshold
+    val bytes = LoopOpt.statSize(edges0)
+    if (driverMax >= 0 && bytes <= driverMax) return clustersOnDriver(edges0)
     // Loop physical hygiene (LoopOpt scaladoc): partitions derived
     // from the MEASURED edge size, standing tables co-partitioned
     // once (edges by dst — the neighbor-min probe's key; labels by
@@ -371,8 +393,7 @@ object Dedup {
     // driver jobs per round (two eager checkpoints + a joined count);
     // now the single count materializes the lazy checkpoint and
     // probes in one job.
-    val spark = pairs.sparkSession
-    val nP = LoopOpt.loopPartitions(spark, LoopOpt.statSize(edges0))
+    val nP = LoopOpt.loopPartitions(spark, bytes)
     LoopOpt.withLoopConf(spark, nP) {
       val edges = edges0.repartition(nP, col("dst")).localCheckpoint()
       Checkpoints.free(edges0) // re-materialized co-partitioned above
@@ -414,6 +435,40 @@ object Dedup {
       require(changed == 0, s"label propagation did not converge in $maxIters iterations")
       labels
     }
+  }
+
+  /** [[clusters]] for an edge set that fits on the driver: min-root
+    * union-find over the collected symmetric edges (`src`, `dst`),
+    * returned as a local relation with the loop's schema. A union
+    * always keeps the smaller root, so every root is its component's
+    * min id — the loop's fixpoint label. A null id stays a singleton
+    * with a null `cluster_id`, as in the loop, whose equi-joins never
+    * match null. Frees `edges`. */
+  private def clustersOnDriver(edges: DataFrame): DataFrame = {
+    val rows = edges.collect()
+    Checkpoints.free(edges)
+    val nullable = edges.schema("src").nullable
+    val schema = StructType(Seq(StructField("node", LongType, nullable),
+      StructField("cluster_id", LongType, nullable)))
+    // the edges are symmetric, so `src` holds every endpoint
+    val ids = rows.collect { case r if !r.isNullAt(0) => r.getLong(0) }.distinct.sorted
+    val parent = Array.range(0, ids.length)
+    def find(i: Int): Int = {
+      var r = i
+      while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
+      r
+    }
+    // ids are sorted, so the min index is the min id
+    rows.foreach { r =>
+      if (!r.isNullAt(0) && !r.isNullAt(1)) {
+        val a = find(java.util.Arrays.binarySearch(ids, r.getLong(0)))
+        val b = find(java.util.Arrays.binarySearch(ids, r.getLong(1)))
+        if (a < b) parent(b) = a else if (b < a) parent(a) = b
+      }
+    }
+    val labelled = ids.indices.map(i => Row(ids(i), ids(find(i))))
+    val out = if (rows.exists(_.isNullAt(0))) labelled :+ Row(null, null) else labelled
+    edges.sparkSession.createDataFrame(java.util.Arrays.asList(out: _*), schema)
   }
 
   /**

@@ -41,16 +41,20 @@ object LoopOpt {
     * optimizer's sizeInBytes is useless here — Dataset.localCheckpoint
     * carries the ORIGINATING plan's estimate through (measured: 6 TB
     * claimed for a 7,146-row materialized edge list), so loops sized
-    * from it never adapt. Falls back to Long.MaxValue (= keep the
-    * session's full parallelism) when nothing is materialized. */
+    * from it never adapt. An empty checkpoint stores no block, so it
+    * has no storage info: when every LogicalRDD is checkpointed the
+    * missing infos count as 0 bytes. Falls back to Long.MaxValue
+    * (= keep the session's full parallelism) when something is not
+    * materialized. */
   def statSize(df: DataFrame): Long = {
-    val ids = df.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
-    }.toSet
-    if (ids.isEmpty) return Long.MaxValue
+    val rdds = df.queryExecution.analyzed.collect {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
+    }
+    if (rdds.isEmpty) return Long.MaxValue
+    val ids = rdds.map(_.id).toSet
     val infos = df.sparkSession.sparkContext.getRDDStorageInfo
       .filter(i => ids.contains(i.id))
-    if (infos.isEmpty) Long.MaxValue
+    if (infos.isEmpty && !rdds.forall(_.isCheckpointed)) Long.MaxValue
     else infos.map(i => i.memSize + i.diskSize).sum
   }
 
@@ -59,9 +63,7 @@ object LoopOpt {
   def loopPartitions(spark: SparkSession, bytes: Long): Int = {
     val ceil = spark.sessionState.conf.numShufflePartitions
     val want = math.max(1L, (bytes + BytesPerPartition - 1) / BytesPerPartition)
-    val r = math.min(ceil.toLong, want).toInt
-    if (sys.env.contains("GRAFT_LOOP_DEBUG")) println(s"[loopopt] bytes=$bytes nP=$r")
-    r
+    math.min(ceil.toLong, want).toInt
   }
 
   /** Runs `body` with the loop conf set (shuffle partitions = `nP`,

@@ -544,10 +544,13 @@ object EventStreams {
     * `batch < batchId` (metadata-only — a replayed batch never reads
     * its own prior partial rows, and partition pruning means the
     * excluded dirs' files are never opened) and drop the bookkeeping
-    * column so callers see the operator's own schema. */
-  private def stateBefore(spark: SparkSession, dir: String,
-                          batchId: Long): DataFrame =
-    spark.read.parquet(dir).filter(col("batch") < batchId).drop("batch")
+    * column so callers see the operator's own schema. A caller that
+    * knows the schema its kernel `written` passes it: the read then
+    * skips the parquet footer-inference job. */
+  private def stateBefore(spark: SparkSession, dir: String, batchId: Long,
+                          written: Option[StructType] = None): DataFrame =
+    written.fold(spark.read)(w => spark.read.schema(w.add("batch", LongType)))
+      .parquet(dir).filter(col("batch") < batchId).drop("batch")
 
   /**
    * STREAMING MinHash NEAR-DEDUP — the continuous-ingestion form of
@@ -619,13 +622,14 @@ object EventStreams {
     * `batch=<id>` of `outDir`, the batch's docs and sketch rows into
     * the state dirs. The caller owns the protocol (partial repair +
     * committed skip); this kernel owns determinism — given the same
-    * committed prior state it writes the same bytes on every replay. */
+    * committed prior state it writes the same bytes on every replay.
+    * Returns the schema of the pair rows it wrote. */
   private def writeNearDupBatch(s: SparkSession,
                                 conf: org.apache.hadoop.conf.Configuration,
                                 batch: DataFrame, batchId: Long,
                                 outDir: String, docsDir: String, sketchDir: String,
                                 shingleN: Int, k: Int, bands: Int,
-                                num: Int, den: Int): Unit = {
+                                num: Int, den: Int): StructType = {
     val b = batch.select("doc_id", "text").localCheckpoint()
     // ONE shingle spine and ONE band-row frame per micro-batch,
     // shared by all three consumers (internal-pair join, cross-batch
@@ -645,8 +649,8 @@ object EventStreams {
     val out =
       if (hasCommittedBatchBefore(conf, sketchDir, batchId)) {
         val cross = graft.operators.Dedup.incrementalNearDupsFromSketchSpine(
-            stateBefore(s, sketchDir, batchId),
-            stateBefore(s, docsDir, batchId),
+            stateBefore(s, sketchDir, batchId, Some(bandRows.schema)),
+            stateBefore(s, docsDir, batchId, Some(b.schema)),
             bandRows, spine, "doc_id", "text", shingleN, num, den)
           // one-shot orientation: doc_a < doc_b with (na, nb)
           // following the id order, not the corpus/fresh roles
@@ -672,6 +676,7 @@ object EventStreams {
     graft.operators.Checkpoints.free(bandRows)
     graft.operators.Checkpoints.free(spine)
     graft.operators.Checkpoints.free(b)
+    out.schema
   }
 
   /** The newest committed `batch=<i>` with i < batchId, or None —
@@ -723,19 +728,21 @@ object EventStreams {
     val dirs = Seq(pairsDir, docsDir, sketchDir, clustersDir)
     dropPartialBatchDirs(conf, dirs)
     if (ingestSkip(conf, dirs, batchId, strictDirs = dirs) == RunKernel) {
-      writeNearDupBatch(spark, conf,
+      val pairsSchema = writeNearDupBatch(spark, conf,
         batch.select(col(idCol).as("doc_id"), col(textCol).as("text")),
         batchId, pairsDir, docsDir, sketchDir, shingleN, k, bands, num, den)
       // fold THIS batch's committed pairs into the standing assignment
-      val newPairs = spark.read.parquet(batchPart(pairsDir, batchId))
-        .select("doc_a", "doc_b")
+      // (both reads declare the written schema: no footer-inference job)
+      val newPairs = spark.read.schema(pairsSchema)
+        .parquet(batchPart(pairsDir, batchId)).select("doc_a", "doc_b")
+      // what clustersIncremental writes: (node, cluster_id), both long
+      val clusterSchema = StructType(Seq(StructField("node", LongType),
+        StructField("cluster_id", LongType)))
       val labels = latestCommittedBatchBefore(conf, clustersDir, batchId) match {
-        case Some(prev) => spark.read.parquet(clustersDir)
-          .filter(col("batch") === prev).drop("batch")
+        case Some(prev) => spark.read.schema(clusterSchema.add("batch", LongType))
+          .parquet(clustersDir).filter(col("batch") === prev).drop("batch")
         case None => spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(Seq(StructField("node", LongType),
-            StructField("cluster_id", LongType))))
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], clusterSchema)
       }
       graft.operators.Dedup.clustersIncremental(labels, newPairs)
         .write.mode("overwrite").parquet(batchPart(clustersDir, batchId))

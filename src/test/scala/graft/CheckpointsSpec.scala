@@ -29,6 +29,69 @@ class CheckpointsSpec extends SparkTestBase {
     assert(persisted === before)
   }
 
+  test("Checkpoints.free twice sends one removal") {
+    import org.apache.spark.scheduler._
+    val df = Seq(1L, 2L).toDF("x").localCheckpoint()
+    val id = df.queryExecution.analyzed.collectFirst {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
+    }.get
+    val removals = new java.util.concurrent.atomic.AtomicInteger()
+    val markerJob = new java.util.concurrent.atomic.AtomicInteger(-1)
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onUnpersistRDD(e: SparkListenerUnpersistRDD): Unit =
+        if (e.rddId == id) removals.incrementAndGet()
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties.getProperty("spark.job.description") == "free-marker")
+          markerJob.set(e.jobId)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == markerJob.get) drained.countDown()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      graft.operators.Checkpoints.free(df)
+      graft.operators.Checkpoints.free(df)
+      // one queue delivers events in post order: the marker job's end
+      // arrives after both frees' removal events
+      spark.sparkContext.setJobDescription("free-marker")
+      try assert(spark.range(3).count() === 3L)
+      finally spark.sparkContext.setJobDescription(null)
+      assert(drained.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      assert(removals.get === 1)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("LoopOpt.statSize: an empty checkpoint measures 0, unmaterialized state MaxValue") {
+    import graft.operators.LoopOpt.statSize
+    // an empty eager checkpoint stores no block, so it has no storage info
+    val empty = spark.range(0).toDF("x").localCheckpoint()
+    assert(statSize(empty) === 0L)
+    val full = Seq(1L, 2L, 3L).toDF("x").localCheckpoint()
+    assert(statSize(full) > 0L && statSize(full) < Long.MaxValue)
+    // nothing materialized: a lazy checkpoint before any action, and a
+    // plan with no LogicalRDD at all
+    val lazyCp = spark.range(5).toDF("x").localCheckpoint(false)
+    assert(statSize(lazyCp) === Long.MaxValue)
+    assert(statSize(spark.range(5).toDF("x")) === Long.MaxValue)
+    Seq(empty, full, lazyCp).foreach(graft.operators.Checkpoints.free)
+  }
+
+  test("small clusters, clustersIncremental and ingestDedupBatch hold no storage afterwards") {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("doc_a", "doc_b")
+    assert(graft.operators.Dedup.clusters(pairs).collect().length === 5)
+    val labels = Seq((2L, 2L), (4L, 2L)).toDF("node", "cluster_id")
+    assert(graft.operators.Dedup.clustersIncremental(labels, pairs).collect().length === 6)
+    val docs = Seq(
+      (1L, "alpha bravo charlie delta echo foxtrot golf hotel india juliet"),
+      (2L, "alpha bravo charlie delta echo foxtrot golf hotel india kilo"))
+      .toDF("doc_id", "text")
+    val state = s"${tmpDir("graft_leak_")}/state"
+    graft.streaming.EventStreams.ingestDedupBatch(spark, docs, state, 0L)
+    assert(spark.read.parquet(s"$state/clusters").count() === 2L)
+    assert(spark.sparkContext.getPersistentRDDs.keySet === before)
+  }
+
   test("pageRank loop storage stays bounded across rounds") {
     val before = persisted
     // a ring mixes slowly — guarantees multiple power rounds

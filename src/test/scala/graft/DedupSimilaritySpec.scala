@@ -82,32 +82,101 @@ class DedupSimilaritySpec extends SparkTestBase {
       .filter(col("doc_id") < 3).count() == 0)
   }
 
+  /** Runs `body` once on each `clusters` path: the driver union-find
+    * (small graphs under the session's default threshold) and the
+    * distributed loop, forced by a scoped
+    * `autoBroadcastJoinThreshold=-1`. */
+  private def onBothClusterPaths(body: => Unit): Unit = {
+    body
+    withLoopPath(body)
+  }
+
+  private def withLoopPath[A](body: => A): A = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    try body
+    finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("clusters: transitive chains collapse to one min-labeled component") {
     import spark.implicits._
     // a~b, b~c (no direct a~c edge) plus an isolated pair: {1,2,3} and {10,11}
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("doc_a", "doc_b")
-    val got = Dedup.clusters(pairs).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
+    onBothClusterPaths {
+      val got = Dedup.clusters(pairs).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
+    }
   }
 
   test("clusters: long path converges (diameter > 2) and singleton edges keep both ends") {
     import spark.implicits._
     // path 1-2-3-4-5-6: min label must walk the whole diameter
     val path = (1L to 5L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val got = Dedup.clusters(path).collect().map(r => r.getLong(1)).distinct
-    assert(got.toSeq == Seq(1L))
+    onBothClusterPaths {
+      val got = Dedup.clusters(path).collect().map(r => r.getLong(1)).distinct
+      assert(got.toSeq == Seq(1L))
+    }
   }
 
   test("canonical keep = corpus minus non-min cluster members (count identity)") {
     val pairs = Dedup.minhashNearDups(docs, "doc_id", "text")
-    val cl = Dedup.clusters(pairs)
-    val losers = cl.filter(col("node") =!= col("cluster_id")).count()
     val kept = Queries.queries("dedup_keep_canonical")(spark, sf).count()
-    assert(kept == docs.count() - losers)
-    // every cluster keeps exactly one member: n_clusters = kept-in-pairs docs
-    val nClusters = cl.select("cluster_id").distinct().count()
-    assert(nClusters == cl.count() - losers)
+    onBothClusterPaths {
+      val cl = Dedup.clusters(pairs)
+      val losers = cl.filter(col("node") =!= col("cluster_id")).count()
+      assert(kept == docs.count() - losers)
+      // every cluster keeps exactly one member: n_clusters = kept-in-pairs docs
+      val nClusters = cl.select("cluster_id").distinct().count()
+      assert(nClusters == cl.count() - losers)
+      graft.operators.Checkpoints.free(cl)
+    }
+  }
+
+  test("clusters: the driver union-find equals the distributed loop (rows and schema)") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(20261018L)
+    def ids(n: Int): Seq[Long] = rnd.shuffle((1 to n).map(_ * 7L + rnd.nextInt(5)).distinct)
+    // a chain over shuffled ids: diameter n - 1, min label far from the ends
+    def chain(n: Int): Seq[(Long, Long)] = { val v = ids(n); v.zip(v.tail) }
+    // stars around random hubs, two of them bridged by one edge
+    def stars: Seq[(Long, Long)] = {
+      val v = ids(40)
+      val hubs = v.take(4)
+      val spokes = v.drop(4).zipWithIndex.map { case (x, i) => (hubs(i % 4), x) }
+      spokes :+ (v(10), v(11))
+    }
+    // duplicate, reversed and self edges over a few components
+    def noisy: Seq[(Long, Long)] = {
+      val v = ids(30)
+      val base = (0 until 40).map(_ => (v(rnd.nextInt(30)), v(rnd.nextInt(30))))
+      base ++ base.take(10) ++ base.take(10).map(_.swap) ++ v.take(5).map(x => (x, x))
+    }
+    val nonNull = Seq("chains" -> (chain(12) ++ chain(9)), "stars" -> stars,
+      "noisy" -> noisy, "empty" -> Seq.empty[(Long, Long)])
+    val graphs = nonNull.map { case (n, es) => n -> es.toDF("doc_a", "doc_b") } ++
+      Seq("null ids" -> (noisy.map { case (a, b) => (Option(a), Option(b)) } ++
+        Seq((None, Some(3L)), (Some(3L), None), (Some(4L), Some(3L)), (None, None)))
+        .toDF("doc_a", "doc_b"))
+    for ((name, pairs) <- graphs) {
+      def run() = {
+        val cl = Dedup.clusters(pairs)
+        val rows = cl.collect().toSeq.map(r =>
+          (Option(r.get(0)).map(_.asInstanceOf[Long]), Option(r.get(1)).map(_.asInstanceOf[Long])))
+        // the loop's result is a checkpoint; the driver's a local relation
+        val checkpointed = cl.queryExecution.analyzed.collectFirst {
+          case lr: org.apache.spark.sql.execution.LogicalRDD => lr
+        }.nonEmpty
+        graft.operators.Checkpoints.free(cl)
+        (cl.schema, rows.sortBy(_.toString), checkpointed)
+      }
+      val driver = run()
+      val loop = withLoopPath(run())
+      assert(!driver._3 && loop._3, s"$name: both paths must run")
+      assert(driver._1 === loop._1, s"$name: schema")
+      assert(driver._2 === loop._2, s"$name: rows")
+    }
   }
 
   test("incremental fresh-vs-corpus pairs match the batch result restricted to the split") {
@@ -573,10 +642,12 @@ class DedupSimilaritySpec extends SparkTestBase {
     // component must relabel to the global min (1), and an unrelated
     // new pair forms its own cluster
     val newPairs = Seq((1L, 4L), (1L, 6L), (10L, 12L)).toDF("doc_a", "doc_b")
-    val out = graft.operators.Dedup.clustersIncremental(labels, newPairs)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(out === Map(1L -> 1L, 2L -> 1L, 4L -> 1L, 6L -> 1L, 8L -> 1L,
-      10L -> 10L, 12L -> 10L))
+    onBothClusterPaths {
+      val out = graft.operators.Dedup.clustersIncremental(labels, newPairs)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(out === Map(1L -> 1L, 2L -> 1L, 4L -> 1L, 6L -> 1L, 8L -> 1L,
+        10L -> 10L, 12L -> 10L))
+    }
   }
 
   test("bandBucketHistogram predicts the banded join across families") {
