@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
-import org.apache.spark.storage.StorageLevel
 
 /**
  * Storage hygiene for `localCheckpoint()`ed frames inside iterative
@@ -24,13 +23,9 @@ object Checkpoints {
     * analyzed plan — for a checkpointed frame (or a projection over
     * one) that is exactly its own truncated-lineage RDD. Only call
     * once NOTHING will read the frame again: a localCheckpointed RDD
-    * cannot be recomputed after its blocks are dropped. Freeing an
-    * already freed RDD is a no-op (callers free a frame and then the
-    * frames inside its plan): a second non-blocking removal of the
-    * same RDD would run concurrently with the first. */
+    * cannot be recomputed after its blocks are dropped. */
   def free(df: DataFrame): Unit =
     df.queryExecution.analyzed.collect {
-      case lr: LogicalRDD => lr.rdd
-    }.filter(_.getStorageLevel != StorageLevel.NONE)
-      .foreach(_.unpersist(blocking = false))
+      case lr: LogicalRDD => lr
+    }.foreach(_.rdd.unpersist(blocking = false))
 }

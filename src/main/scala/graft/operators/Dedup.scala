@@ -259,10 +259,9 @@ object Dedup {
    * across any merges the new pairs introduce (two old clusters
    * bridged by one new pair collapse to the smaller cluster id).
    * `labels`: (node, cluster_id); `newPairs`: (aCol, bCol). Runs
-   * [[clusters]], so its size rule applies: a star + new edge set at
-   * or below `spark.sql.autoBroadcastJoinThreshold` is labelled on the
-   * driver and holds no checkpoint; `maxIters` bounds only the
-   * distributed loop.
+   * [[clusters]], so its size rule applies: a star + new edge set that
+   * fits in one loop partition is labelled on the driver and holds no
+   * checkpoint; `maxIters` bounds only the distributed loop.
    */
   def clustersIncremental(labels: DataFrame, newPairs: DataFrame,
                           aCol: String = "doc_a", bCol: String = "doc_b",
@@ -363,27 +362,35 @@ object Dedup {
    * converged label is constant per component and equal to m.
    *
    * Size rule: when the measured bytes of the distinct symmetric edge
-   * set (`LoopOpt.statSize` of its checkpoint) are at or below
-   * `spark.sql.autoBroadcastJoinThreshold` (the size the session
-   * already ships through the driver; -1 disables this path), the
+   * set (`LoopOpt.statSize` of its checkpoint) fit in one loop
+   * partition (`LoopOpt.BytesPerPartition`, 32 MB), the loop would run
+   * every round as one serial task plus fixed per-job latency, so the
    * edges are collected and labelled by min-root union-find on the
    * driver instead — same rows, same schema, a local relation that
-   * holds no checkpoint. Such a graph is far below the 32 MB a loop
-   * partition targets, so the loop would run every round as one
-   * serial task plus fixed per-job latency. `maxIters` bounds only
-   * the distributed loop; its result IS a checkpoint, which the
-   * caller frees (`Checkpoints.free`) once nothing reads it.
+   * holds no checkpoint. Larger graphs run the distributed loop
+   * ([[clustersLoop]]); `maxIters` bounds only that loop, and its
+   * result IS a checkpoint, which the caller frees
+   * (`Checkpoints.free`) once nothing reads it.
    */
   def clusters(pairs: DataFrame, aCol: String = "doc_a", bCol: String = "doc_b",
                maxIters: Int = 25): DataFrame = {
+    val edges0 = symmetricEdges(pairs, aCol, bCol)
+    if (LoopOpt.statSize(edges0) <= LoopOpt.BytesPerPartition) clustersOnDriver(edges0)
+    else clustersLoop(edges0, maxIters)
+  }
+
+  /** The distinct symmetric edge set (`src`, `dst`) of a pair list,
+    * eagerly checkpointed so [[clusters]] can measure it. */
+  private[graft] def symmetricEdges(pairs: DataFrame, aCol: String = "doc_a",
+                                    bCol: String = "doc_b"): DataFrame = {
     val sym = pairs.select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
-    val edges0 = sym.union(sym.select(col("dst"), col("src")))
-      .distinct().localCheckpoint()
-    val spark = pairs.sparkSession
-    // read before any withLoopConf: the loop conf turns it off (-1)
-    val driverMax = spark.sessionState.conf.autoBroadcastJoinThreshold
-    val bytes = LoopOpt.statSize(edges0)
-    if (driverMax >= 0 && bytes <= driverMax) return clustersOnDriver(edges0)
+    sym.union(sym.select(col("dst"), col("src"))).distinct().localCheckpoint()
+  }
+
+  /** [[clusters]]' distributed loop over [[symmetricEdges]] `edges0`,
+    * at any size. Frees `edges0` and its own edge copy; the result is
+    * a checkpoint, which the caller frees. */
+  private[graft] def clustersLoop(edges0: DataFrame, maxIters: Int = 25): DataFrame = {
     // Loop physical hygiene (LoopOpt scaladoc): partitions derived
     // from the MEASURED edge size, standing tables co-partitioned
     // once (edges by dst — the neighbor-min probe's key; labels by
@@ -393,7 +400,8 @@ object Dedup {
     // driver jobs per round (two eager checkpoints + a joined count);
     // now the single count materializes the lazy checkpoint and
     // probes in one job.
-    val nP = LoopOpt.loopPartitions(spark, bytes)
+    val spark = edges0.sparkSession
+    val nP = LoopOpt.loopPartitions(spark, LoopOpt.statSize(edges0))
     LoopOpt.withLoopConf(spark, nP) {
       val edges = edges0.repartition(nP, col("dst")).localCheckpoint()
       Checkpoints.free(edges0) // re-materialized co-partitioned above
@@ -433,6 +441,8 @@ object Dedup {
         it += 1
       }
       require(changed == 0, s"label propagation did not converge in $maxIters iterations")
+      // the last count materialized `labels`: nothing reads the edges again
+      Checkpoints.free(edges)
       labels
     }
   }

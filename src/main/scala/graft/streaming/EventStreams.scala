@@ -744,8 +744,10 @@ object EventStreams {
         case None => spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], clusterSchema)
       }
-      graft.operators.Dedup.clustersIncremental(labels, newPairs)
-        .write.mode("overwrite").parquet(batchPart(clustersDir, batchId))
+      val folded = graft.operators.Dedup.clustersIncremental(labels, newPairs)
+      folded.write.mode("overwrite").parquet(batchPart(clustersDir, batchId))
+      // a large fold's result is the loop's checkpoint
+      graft.operators.Checkpoints.free(folded)
     }
   }
 

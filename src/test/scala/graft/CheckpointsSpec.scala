@@ -29,38 +29,6 @@ class CheckpointsSpec extends SparkTestBase {
     assert(persisted === before)
   }
 
-  test("Checkpoints.free twice sends one removal") {
-    import org.apache.spark.scheduler._
-    val df = Seq(1L, 2L).toDF("x").localCheckpoint()
-    val id = df.queryExecution.analyzed.collectFirst {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
-    }.get
-    val removals = new java.util.concurrent.atomic.AtomicInteger()
-    val markerJob = new java.util.concurrent.atomic.AtomicInteger(-1)
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onUnpersistRDD(e: SparkListenerUnpersistRDD): Unit =
-        if (e.rddId == id) removals.incrementAndGet()
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties.getProperty("spark.job.description") == "free-marker")
-          markerJob.set(e.jobId)
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (e.jobId == markerJob.get) drained.countDown()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      graft.operators.Checkpoints.free(df)
-      graft.operators.Checkpoints.free(df)
-      // one queue delivers events in post order: the marker job's end
-      // arrives after both frees' removal events
-      spark.sparkContext.setJobDescription("free-marker")
-      try assert(spark.range(3).count() === 3L)
-      finally spark.sparkContext.setJobDescription(null)
-      assert(drained.await(30, java.util.concurrent.TimeUnit.SECONDS))
-      assert(removals.get === 1)
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   test("LoopOpt.statSize: an empty checkpoint measures 0, unmaterialized state MaxValue") {
     import graft.operators.LoopOpt.statSize
     // an empty eager checkpoint stores no block, so it has no storage info
@@ -89,6 +57,16 @@ class CheckpointsSpec extends SparkTestBase {
     val state = s"${tmpDir("graft_leak_")}/state"
     graft.streaming.EventStreams.ingestDedupBatch(spark, docs, state, 0L)
     assert(spark.read.parquet(s"$state/clusters").count() === 2L)
+    assert(spark.sparkContext.getPersistentRDDs.keySet === before)
+  }
+
+  test("the distributed clusters loop holds only its result checkpoint") {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("doc_a", "doc_b")
+    val labels = graft.operators.Dedup.clustersLoop(graft.operators.Dedup.symmetricEdges(pairs))
+    assert(labels.collect().length === 5)
+    assert(spark.sparkContext.getPersistentRDDs.size === before.size + 1)
+    graft.operators.Checkpoints.free(labels)
     assert(spark.sparkContext.getPersistentRDDs.keySet === before)
   }
 

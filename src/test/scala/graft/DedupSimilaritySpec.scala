@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.{Dedup, Similarity}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -82,31 +83,21 @@ class DedupSimilaritySpec extends SparkTestBase {
       .filter(col("doc_id") < 3).count() == 0)
   }
 
-  /** Runs `body` once on each `clusters` path: the driver union-find
-    * (small graphs under the session's default threshold) and the
-    * distributed loop, forced by a scoped
-    * `autoBroadcastJoinThreshold=-1`. */
-  private def onBothClusterPaths(body: => Unit): Unit = {
-    body
-    withLoopPath(body)
-  }
-
-  private def withLoopPath[A](body: => A): A = {
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val saved = spark.conf.getOption(key)
-    spark.conf.set(key, "-1")
-    try body
-    finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-  }
+  /** The two `clusters` paths: `clusters` itself, which labels these
+    * small graphs on the driver, and its distributed loop, which runs
+    * at any size. */
+  private val clusterPaths: Seq[(String, DataFrame => DataFrame)] =
+    Seq("driver" -> (p => Dedup.clusters(p)),
+      "loop" -> (p => Dedup.clustersLoop(Dedup.symmetricEdges(p))))
 
   test("clusters: transitive chains collapse to one min-labeled component") {
     import spark.implicits._
     // a~b, b~c (no direct a~c edge) plus an isolated pair: {1,2,3} and {10,11}
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("doc_a", "doc_b")
-    onBothClusterPaths {
-      val got = Dedup.clusters(pairs).collect()
+    for ((path, cluster) <- clusterPaths) {
+      val got = cluster(pairs).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
+      assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L), path)
     }
   }
 
@@ -114,22 +105,22 @@ class DedupSimilaritySpec extends SparkTestBase {
     import spark.implicits._
     // path 1-2-3-4-5-6: min label must walk the whole diameter
     val path = (1L to 5L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    onBothClusterPaths {
-      val got = Dedup.clusters(path).collect().map(r => r.getLong(1)).distinct
-      assert(got.toSeq == Seq(1L))
+    for ((name, cluster) <- clusterPaths) {
+      val got = cluster(path).collect().map(r => r.getLong(1)).distinct
+      assert(got.toSeq == Seq(1L), name)
     }
   }
 
   test("canonical keep = corpus minus non-min cluster members (count identity)") {
     val pairs = Dedup.minhashNearDups(docs, "doc_id", "text")
     val kept = Queries.queries("dedup_keep_canonical")(spark, sf).count()
-    onBothClusterPaths {
-      val cl = Dedup.clusters(pairs)
+    for ((path, cluster) <- clusterPaths) {
+      val cl = cluster(pairs)
       val losers = cl.filter(col("node") =!= col("cluster_id")).count()
-      assert(kept == docs.count() - losers)
+      assert(kept == docs.count() - losers, path)
       // every cluster keeps exactly one member: n_clusters = kept-in-pairs docs
       val nClusters = cl.select("cluster_id").distinct().count()
-      assert(nClusters == cl.count() - losers)
+      assert(nClusters == cl.count() - losers, path)
       graft.operators.Checkpoints.free(cl)
     }
   }
@@ -160,8 +151,8 @@ class DedupSimilaritySpec extends SparkTestBase {
         Seq((None, Some(3L)), (Some(3L), None), (Some(4L), Some(3L)), (None, None)))
         .toDF("doc_a", "doc_b"))
     for ((name, pairs) <- graphs) {
-      def run() = {
-        val cl = Dedup.clusters(pairs)
+      def run(cluster: DataFrame => DataFrame) = {
+        val cl = cluster(pairs)
         val rows = cl.collect().toSeq.map(r =>
           (Option(r.get(0)).map(_.asInstanceOf[Long]), Option(r.get(1)).map(_.asInstanceOf[Long])))
         // the loop's result is a checkpoint; the driver's a local relation
@@ -171,8 +162,7 @@ class DedupSimilaritySpec extends SparkTestBase {
         graft.operators.Checkpoints.free(cl)
         (cl.schema, rows.sortBy(_.toString), checkpointed)
       }
-      val driver = run()
-      val loop = withLoopPath(run())
+      val Seq(driver, loop) = clusterPaths.map { case (_, cluster) => run(cluster) }
       assert(!driver._3 && loop._3, s"$name: both paths must run")
       assert(driver._1 === loop._1, s"$name: schema")
       assert(driver._2 === loop._2, s"$name: rows")
@@ -439,7 +429,7 @@ class DedupSimilaritySpec extends SparkTestBase {
         case s: Seq[_] => s.toList
         case x => x
       }.toList).toSet
-    def pin(build: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
+    def pin(build: DataFrame => DataFrame,
             rung: String): Unit =
       assert(rows(build(even).unionByName(build(odd))) === rows(build(emb)),
         s"$rung append must equal rebuild")
@@ -642,12 +632,16 @@ class DedupSimilaritySpec extends SparkTestBase {
     // component must relabel to the global min (1), and an unrelated
     // new pair forms its own cluster
     val newPairs = Seq((1L, 4L), (1L, 6L), (10L, 12L)).toDF("doc_a", "doc_b")
-    onBothClusterPaths {
-      val out = graft.operators.Dedup.clustersIncremental(labels, newPairs)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(out === Map(1L -> 1L, 2L -> 1L, 4L -> 1L, 6L -> 1L, 8L -> 1L,
-        10L -> 10L, 12L -> 10L))
-    }
+    val want = Map(1L -> 1L, 2L -> 1L, 4L -> 1L, 6L -> 1L, 8L -> 1L,
+      10L -> 10L, 12L -> 10L)
+    val out = graft.operators.Dedup.clustersIncremental(labels, newPairs)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(out === want)
+    // the same star + new edge set through the distributed loop
+    val star = labels.select(col("node").as("doc_a"), col("cluster_id").as("doc_b"))
+    val loop = Dedup.clustersLoop(Dedup.symmetricEdges(star.unionByName(newPairs)))
+    assert(loop.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap === want)
+    graft.operators.Checkpoints.free(loop)
   }
 
   test("bandBucketHistogram predicts the banded join across families") {
